@@ -20,16 +20,16 @@ object GraftSession {
     * buffers) must spill — RocksDB keeps state off-heap on local disk
     * with changelog checkpointing, so per-executor state is bounded by
     * disk, not heap. Wired here (not per-query) because the provider
-    * is a session-global engine property; StreamBench measures both
-    * providers on the same feed (BENCH_NOTES §streaming).
+    * is a session-global engine property; both providers were measured
+    * on the same feed (BENCH_NOTES "state-store provider lanes").
     */
   def stateStoreProvider: String =
     providerClassFor(sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs"))
 
   /** Short provider name → provider class (unknown names fall back to
     * the default store, matching the env var's lenient contract).
-    * Exposed so StreamBench's per-provider lanes and the spec use the
-    * same mapping the session factory does.
+    * Exposed so StateStoreProviderSpec uses the same mapping the
+    * session factory does.
     */
   def providerClassFor(name: String): String = name.toLowerCase match {
     case "rocksdb" =>

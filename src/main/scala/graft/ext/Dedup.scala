@@ -77,11 +77,12 @@ object Dedup {
     * by `on` and EVICTED once the watermark passes first-seen + delay
     * (`dropDuplicatesWithinWatermark`), so steady-state size is
     * keys-per-horizon, not corpus size — the same bounded-state
-    * discipline as the trip correlator (SURVEY §2.7, measured in
-    * StreamBench run 2). For content dedup, key on a fingerprint
-    * column ([[graft.ext.TextAnalysis.fingerprintMd5]]) computed in
-    * the select upstream — the state store then holds 32 hex chars
-    * per in-horizon key instead of full documents.
+    * discipline as the trip correlator (SURVEY §2.7; BENCH_NOTES
+    * "Streaming throughput + bounded state", run 2). For content
+    * dedup, key on a fingerprint column
+    * ([[graft.ext.TextAnalysis.fingerprintMd5]]) computed in the
+    * select upstream — the state store then holds 32 hex chars per
+    * in-horizon key instead of full documents.
     */
   def streamingExact(
       df: DataFrame,

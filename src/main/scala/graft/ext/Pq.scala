@@ -88,6 +88,8 @@ object Pq {
       if (sampleN >= total) {
         val full = pinned.collect()
           .map(_.getSeq[Number](0).map(_.doubleValue()).toArray)
+        // copyOfRange below would zero-pad a short vector silently
+        SimilaritySearch.requireDim(full.map(_.length), dim)
         (0 until m).toVector.map { j =>
           val sliced = full.map(v =>
             java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
@@ -152,6 +154,8 @@ object Pq {
       .map(_.getSeq[Number](0).map(_.doubleValue()).toIndexedSeq)
       .toVector
     require(sample.nonEmpty, "cannot fit PQ codebooks from an empty frame")
+    // slice below would hand pinnedLloyd a short or truncated last subvector
+    SimilaritySearch.requireDim(sample.map(_.length).toArray, dim)
     val books = (0 until m).toVector.map { j =>
       val subs = sample.map(v =>
         v.slice(j * subDim, (j + 1) * subDim): IndexedSeq[Double])

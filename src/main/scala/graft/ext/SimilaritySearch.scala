@@ -427,10 +427,10 @@ object SimilaritySearch {
     * corpus grows (measured 0.0@10 at the sf0.1 fixture with 4 planes —
     * the true neighbors sit one hyperplane away from the query's bucket
     * and a single probe never sees them), while multi-probe at the same
-    * plane count measures ≥ 0.6 there (BENCH_NOTES.md, reproduce via
-    * `runMain graft.AnnRecallAudit`; floor asserted in
-    * EstimatorQualitySpec). Callers who want the 1-bucket probe cost
-    * and accept the recall loss must say so: [[annTopKSingleProbe]].
+    * plane count measures ≥ 0.6 there (BENCH_NOTES.md "Estimator
+    * quality"; floor asserted in EstimatorQualitySpec). Callers who
+    * want the 1-bucket probe cost and accept the recall loss must say
+    * so: [[annTopKSingleProbe]].
     */
   def annTopK(
       df: DataFrame,
@@ -649,6 +649,17 @@ object SimilaritySearch {
     pinnedLloyd(sample, k, iters).map(_.toSeq)
   }
 
+  /** Every vector of an in-memory sample must have `dim` components:
+    * the Lloyd loops index by `dim`, so a short vector would end in an
+    * ArrayIndexOutOfBoundsException and a long one would be silently
+    * truncated.
+    */
+  private[ext] def requireDim(lengths: Array[Int], dim: Int): Unit = {
+    val bad = lengths.indexWhere(_ != dim)
+    require(bad < 0, s"ragged embedding sample: expected dimension $dim, " +
+      s"got ${lengths(bad)} at vector $bad")
+  }
+
   /** The pinned Lloyd core of [[learnCentroidsDeterministic]], over an
     * already-ordered in-memory sample — shared with
     * [[Pq.fitPinned]]'s per-subspace fits (ONE collect, m pinned
@@ -670,6 +681,7 @@ object SimilaritySearch {
     val n = sample.length
     val arr: Array[Array[Double]] = sample.map(_.toArray).toArray
     val dim = if (n > 0) arr(0).length else 0
+    requireDim(arr.map(_.length), dim)
     val kk = math.min(k, n)
     var cents: Array[Array[Double]] = arr.take(kk).map(_.clone)
     var it = 0
@@ -761,6 +773,7 @@ object SimilaritySearch {
     // bit-identical to the boxed spelling; only boxing and closure
     // allocation went away. The seeded shuffle permutes only by LENGTH,
     // so drawing it over arrays keeps the same initialization.
+    requireDim(raw.map(_.length), raw(0).length)
     val sample: Array[Array[Double]] = {
       val base = raw
       if (!spherical) base

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.schema.TripSchemas
 
-/** Keyed upsert sink for the trips table (SURVEY.md §2.1 S7/S8).
+/** Keyed last-write-wins sink for the trips table (SURVEY.md §2.1 S7/S8).
   *
   * The DynamoDB analog: a `date`-partitioned parquet table with
   * last-write-wins merge by `trip_id`. Partitioning by `date` gives the
@@ -14,16 +14,13 @@ import graft.schema.TripSchemas
   * PruneFileSourcePartitions replaces the reference's manual
   * KeyConditionExpression, daily_kpi_aggregation.py:45-56).
   *
-  * Two write strategies:
-  *  - [[upsert]] — read-merge-rewrite of touched date partitions. Simple
-  *    and compact, but O(partition) I/O per micro-batch: fine for daily
-  *    batch loads, wrong for a 100 s streaming trigger.
-  *  - [[appendDelta]] + [[readMerged]] + [[compact]] — the scale path:
-  *    each micro-batch APPENDS its rows (epoch-stamped); readers apply
-  *    last-write-wins merge-on-read; periodic [[compact]] folds deltas.
-  *    Per-trigger I/O is O(batch), not O(day²). On a production cluster
-  *    the same interface targets a Delta/Iceberg MERGE; plain parquet
-  *    keeps the engine dependency-free here.
+  * One write path: [[appendDelta]] + [[readMerged]] + [[compact]].
+  * Each micro-batch APPENDS its rows (epoch-stamped); readers apply
+  * last-write-wins merge-on-read; periodic [[compact]] folds deltas.
+  * Per-trigger I/O is O(batch), not O(partition) as a read-merge-rewrite
+  * would be. On a production cluster the same interface targets a
+  * Delta/Iceberg MERGE; plain parquet keeps the engine dependency-free
+  * here.
   */
 object TripTableSink {
 
@@ -47,69 +44,14 @@ object TripTableSink {
       .drop("__rn")
   }
 
-  /** Full-snapshot write, date-partitioned. */
-  def writeSnapshot(trips: DataFrame, path: String): Unit =
-    trips.write.mode(SaveMode.Overwrite).partitionBy("date").parquet(path)
-
-  /** Last-write-wins upsert of `batch` into the table at `path`,
-    * keyed by `trip_id`, rewriting only touched `date` partitions.
-    * `epoch` orders writers (foreachBatch passes its batchId).
-    */
-  def upsert(spark: SparkSession, batch: DataFrame, path: String, epoch: Long): Unit = {
-    val incoming = batch.withColumn(seqCol, lit(epoch))
-    val merged =
-      if (!tableExists(spark, path)) lastWriteWins(incoming)
-      else {
-        val existing0 = spark.read.parquet(path)
-        // An append-delta table already carries real epochs — keep them
-        // so merge order stays correct if upsert runs over one (e.g. a
-        // backfill); snapshot tables get a below-everything sentinel.
-        val existing =
-          if (existing0.columns.contains(seqCol)) existing0
-          else existing0.withColumn(seqCol, lit(-1L))
-        // Prune to touched dates only: tiny broadcast semi-join against
-        // the batch's date set, so a day's upsert never reads the table's
-        // full history. Null-safe equality: date can be null (unparsable
-        // pickup time) and a plain equi-join would EXCLUDE stored
-        // null-date rows from the merge, then overwrite their partition
-        // without them — silent deletion.
-        val touched = incoming.select(col("date").as("__touched_date")).distinct()
-        val existingTouched = existing
-          .join(broadcast(touched), existing("date") <=> touched("__touched_date"), "left_semi")
-        lastWriteWins(existingTouched.unionByName(incoming))
-      }
-    val out = merged.drop(seqCol)
-    val conf = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode(SaveMode.Overwrite).partitionBy("date").parquet(path)
-    finally conf.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
-
-  /** foreachBatch hook for a streaming correlation query (merge-rewrite
-    * strategy; prefer [[foreachBatchAppend]] for short triggers).
-    */
-  def foreachBatchUpsert(path: String): (DataFrame, Long) => Unit =
-    (batch, epoch) => {
-      // Materialize first: foreachBatch re-evaluates the batch plan per
-      // action, and upsert both reads and writes the target.
-      val spark = batch.sparkSession
-      val cached = batch.cache()
-      try upsert(spark, cached, path, epoch)
-      finally cached.unpersist()
-    }
-
-  // -------------------------------------------------------------------
-  // Delta-append strategy (scale path)
-  // -------------------------------------------------------------------
-
   /** Append one epoch's rows — O(batch) I/O, no read of existing data.
     * The batch is repartitioned by `date` first: without it every
     * upstream task (state partitions, typically 32+) opens a writer in
     * every touched date dir, so one epoch lands tasks×dates small
     * files and the merge-on-read listing pays for it forever — the
-    * same small-files cliff ManifestProbe measures at 13-18×. With it,
-    * an epoch writes one file per touched date; the added shuffle
-    * moves only the micro-batch's own rows.
+    * small-files cliff BENCH_NOTES "manifest-table probe" measured at
+    * 13-18×. With it, an epoch writes one file per touched date; the
+    * added shuffle moves only the micro-batch's own rows.
     */
   def appendDelta(batch: DataFrame, path: String, epoch: Long): Unit =
     batch.withColumn(seqCol, lit(epoch))
@@ -124,13 +66,11 @@ object TripTableSink {
     mergedView(spark.read.parquet(path))
 
   /** Last-write-wins view over an already-loaded (and possibly
-    * date-pruned) frame. Snapshot/upsert tables carry no epoch column
-    * and are already one-row-per-key; append-delta frames are merged.
-    * Readers that prune first (the daily KPI job) use this so pruning
-    * happens before the merge window.
+    * date-pruned) frame. Readers that prune first (the daily KPI job)
+    * use this so pruning happens before the merge window.
     */
   def mergedView(df: DataFrame): DataFrame =
-    if (df.columns.contains(seqCol)) lastWriteWins(df).drop(seqCol) else df
+    lastWriteWins(df).drop(seqCol)
 
   /** Fold all deltas into a single epoch (run periodically, e.g. daily).
     * Writes the merged snapshot aside, then swaps via two renames (old

@@ -9,17 +9,15 @@ import graft.sink.TripTableSink
 
 /** The full streaming pipeline wired end-to-end (SURVEY.md §3 E2):
   * two JSON value streams → decode (S4) → tagged union (S5) → stateful
-  * correlation (J1/F3/F4 via flatMapGroupsWithState) → keyed upsert sink
-  * (S7), checkpointed.
+  * correlation (J1/F3/F4 via flatMapGroupsWithState) → append-delta
+  * trip table (S7, last-write-wins on read), checkpointed.
   *
   * The default trigger matches the reference's micro-batch contract —
   * 100-record / 100-second Kinesis batching (reference: README.md:26-28)
   * — expressed as `Trigger.ProcessingTime("100 seconds")`; rate limiting
   * belongs to the source (`maxFilesPerTrigger` / `maxOffsetsPerTrigger`).
   *
-  * Sink strategy defaults to append-delta (O(batch) I/O per trigger);
-  * pass `appendMode = false` for the compact merge-rewrite sink when
-  * triggers are long and partitions small.
+  * The sink is [[TripTableSink.appendDelta]]: O(batch) I/O per trigger.
   */
 object TripStreamJob {
 
@@ -32,21 +30,17 @@ object TripStreamJob {
       trigger: Trigger = Trigger.ProcessingTime("100 seconds"),
       faithful: Boolean = true,
       timeoutMs: Long = 0L,
-      watermarkDelay: String = "10 minutes",
-      appendMode: Boolean = true): StreamingQuery = {
+      watermarkDelay: String = "10 minutes"): StreamingQuery = {
     val starts = EventReader.decodeStartStream(spark, startLines)
     val ends = EventReader.decodeEndStream(spark, endLines)
     val events = EventReader.taggedUnion(spark, starts, ends)
     val records =
       TripCorrelation.correlateStream(events, faithful, timeoutMs, watermarkDelay)
-    val sink: (DataFrame, Long) => Unit =
-      if (appendMode) TripTableSink.foreachBatchAppend(tablePath)
-      else TripTableSink.foreachBatchUpsert(tablePath)
     records.toDF().writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(sink)
+      .foreachBatch(TripTableSink.foreachBatchAppend(tablePath))
       .start()
   }
 

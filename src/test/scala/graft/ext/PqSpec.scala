@@ -177,6 +177,37 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
       Pq.fit(clustered, "embedding", dim = 16, m = 4, k = 300))
   }
 
+  test("fit rejects a ragged sample instead of zero-padding it") {
+    // the shared-collect path slices with copyOfRange, which would pad
+    // the one-short second vector with a zero
+    val ragged = clustered.withColumn("embedding",
+      when(col("vec_id") === 1L, slice(col("embedding"), 1, 15))
+        .otherwise(col("embedding")))
+    val e = intercept[IllegalArgumentException](
+      Pq.fit(ragged, "embedding", dim = 16, m = 4, k = 8, sampleN = 300))
+    assert(e.getMessage.contains("expected dimension 16"), e.getMessage)
+    assert(e.getMessage.contains("got 15"), e.getMessage)
+  }
+
+  test("fitPinned checks the sample against dim, ragged or uniformly short") {
+    // slice would hand the last subspace a 3-wide subvector (short) or
+    // drop components (long) without a word
+    val ragged = clustered.withColumn("embedding",
+      when(col("vec_id") === 1L, slice(col("embedding"), 1, 15))
+        .otherwise(col("embedding")))
+    val allShort = clustered.withColumn("embedding", slice(col("embedding"), 1, 15))
+    for (df <- Seq(ragged, allShort)) {
+      val e = intercept[IllegalArgumentException](
+        Pq.fitPinned(df, "vec_id", "embedding", dim = 16, m = 4, k = 8))
+      assert(e.getMessage.contains("expected dimension 16"), e.getMessage)
+      assert(e.getMessage.contains("got 15"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](
+      Pq.fitPinned(clustered, "vec_id", "embedding", dim = 12, m = 4, k = 8))
+    assert(e.getMessage.contains("expected dimension 12"), e.getMessage)
+    assert(e.getMessage.contains("got 16"), e.getMessage)
+  }
+
   test("persisted index round-trips: same neighbors, same ADC distances, pruned read") {
     val m = Pq.fit(clustered, "embedding", dim = 16, m = 4, k = 16, sampleN = 300)
     val coarse = SimilaritySearch.learnCentroids(clustered, "embedding", k = 6, sampleN = 300)

@@ -516,4 +516,17 @@ class SimilaritySpec extends AnyFunSuite with Matchers with SparkTestBase {
       rows.map(_._3).distinct should have size 5
     }
   }
+
+  test("Lloyd cores reject a ragged sample, naming expected and actual dimension") {
+    // the second vector is one short: the Lloyd loops index by the
+    // first vector's length, so it must fail up front, not mid-loop
+    val raw = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0), Array(0.0, 0.0, 1.0))
+    val seeded = intercept[IllegalArgumentException](
+      lloydSeeded(raw, k = 2, iters = 3, seed = 42L, spherical = false))
+    seeded.getMessage should include("expected dimension 3")
+    seeded.getMessage should include("got 2")
+    val pinned = intercept[IllegalArgumentException](
+      pinnedLloyd(raw.toVector.map(_.toIndexedSeq), k = 2, iters = 3))
+    pinned.getMessage should include("expected dimension 3")
+  }
 }

@@ -27,20 +27,20 @@ class TripTableSinkSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val batch = trips(
       ("t1", TripSchemas.StatusStarted, None, 0.0),
       ("t1", TripSchemas.StatusCompleted, Some("2024-05-25 10:25:00"), 24.5))
-    TripTableSink.upsert(spark, batch, path, epoch = 0L)
-    val out = spark.read.parquet(path).collect()
+    TripTableSink.appendDelta(batch, path, epoch = 0L)
+    val out = TripTableSink.readMerged(spark, path).collect()
     out should have size 1
     out.head.getAs[String]("status") shouldBe TripSchemas.StatusCompleted
   }
 
   test("later epoch wins (put_item overwrite semantics)") {
     val path = tmp()
-    TripTableSink.upsert(spark,
+    TripTableSink.appendDelta(
       trips(("t1", TripSchemas.StatusStarted, None, 0.0)), path, epoch = 0L)
-    TripTableSink.upsert(spark,
+    TripTableSink.appendDelta(
       trips(("t1", TripSchemas.StatusCompleted, Some("2024-05-25 10:25:00"), 24.5)),
       path, epoch = 1L)
-    val out = spark.read.parquet(path).collect()
+    val out = TripTableSink.readMerged(spark, path).collect()
     out should have size 1
     out.head.getAs[String]("status") shouldBe TripSchemas.StatusCompleted
     out.head.getAs[Double]("fare_amount") shouldBe 24.5
