@@ -42,10 +42,11 @@ object Par {
     // execution) is needed. Unknown-partitioning plans split two ways:
     // narrow-over-leaf chains (scans, pinned frames, projections —
     // every internal call site) probe `.rdd` as before, which runs no
-    // stages there; anything containing a shuffle-inducing operator
-    // takes the conservative branch — a deterministic keyed repartition
-    // (AQE coalesces it right back at real widths) instead of a probe
-    // that would execute those stages eagerly and duplicate their work.
+    // stages there; anything containing a shuffle- or broadcast-
+    // inducing operator takes the conservative branch — a deterministic
+    // keyed repartition (AQE coalesces it right back at real widths)
+    // instead of a probe that would execute those stages eagerly and
+    // duplicate their work.
     val staticN = plan.outputPartitioning.numPartitions
     val n =
       if (staticN > 0) staticN
@@ -54,6 +55,11 @@ object Par {
           case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => true
           case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => true
           case _: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => true
+          // a broadcast build side is a query stage too: probing `.rdd`
+          // would run its collect job
+          case _: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => true
+          case _: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => true
+          case _: org.apache.spark.sql.execution.joins.CartesianProductExec => true
           case _: org.apache.spark.sql.execution.aggregate.HashAggregateExec => true
           case _: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => true
           case _: org.apache.spark.sql.execution.aggregate.SortAggregateExec => true
@@ -87,8 +93,9 @@ object Par {
       val spreadCp = cp.repartition(p, key).localCheckpoint()
       // the under-partitioned first pin has served its one purpose
       // (feeding the re-spread); release its blocks now instead of
-      // letting them sit until RDD GC (r21 ADVICE — the LinkGraph
-      // iterate-unpersist pattern)
+      // letting them sit until RDD GC (r21 ADVICE). Dataset.unpersist
+      // is a no-op on a localCheckpoint'd frame (the CacheManager never
+      // saw it), so unpersist the checkpointed RDD its plan scans.
       cp.queryExecution.analyzed.collectFirst {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
       }.foreach(_.unpersist(blocking = false))

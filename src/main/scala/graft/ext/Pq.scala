@@ -112,9 +112,9 @@ object Pq {
           "__sub", k, sampleN, iters, seed + j).toVector
       }
     // every consumer of the pinned projection completed inside this
-    // method — release its blocks now (r21 ADVICE; the LinkGraph
-    // iterate-unpersist pattern) instead of holding O(vectors) memory
-    // until RDD GC in long-lived sessions
+    // method — release its blocks now (r21 ADVICE; the checkpointed-RDD
+    // unpersist of Par.checkpointSpread) instead of holding O(vectors)
+    // memory until RDD GC in long-lived sessions
     pinned.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))

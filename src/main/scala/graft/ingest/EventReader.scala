@@ -74,11 +74,17 @@ object EventReader {
   /** P2/S4 consumer side: decode a `value` JSON column against a schema;
     * corrupt payloads become null rows and are dropped (at-least-once,
     * poison records skipped — reference: trip_processor.py:82-84).
+    *
+    * Each line is parsed ONCE: `inline` spreads the one-element array
+    * into columns (a null struct into an all-null row), and a filter
+    * over a generator's output cannot be pushed below it. The plainer
+    * `from_json(...).as("r")` + `where(r.trip_id ...)` + `r.*` spelling
+    * parses three times — the optimizer copies the parse into the
+    * pushed-down filter and into the projection.
     */
   def decodeJson(df: DataFrame, schema: StructType): DataFrame =
-    df.select(from_json(col("value"), schema).as("r"))
-      .where(col("r").isNotNull && col("r.trip_id").isNotNull)
-      .select(col("r.*"))
+    df.select(inline(array(from_json(col("value"), schema))))
+      .where(col("trip_id").isNotNull)
 
   /** DLQ side output (SURVEY.md §2.7): the value lines that fail to
     * decode against `schema` — the records the reference's per-record

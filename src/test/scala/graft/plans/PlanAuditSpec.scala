@@ -411,4 +411,28 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkTestBase {
     p should include("WindowGroupLimit")
     p should include("Partial")
   }
+
+  test("trip event decode parses each JSON line once") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // a non-local source, so the optimizer cannot fold the decode away
+    val lines = spark.range(3).select(
+      concat(lit("{\"trip_id\":\"t"), col("id").cast("string"), lit("\"}")).as("value"))
+    def parses(df: org.apache.spark.sql.Dataset[_]): Int =
+      df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+        .size
+    parses(graft.ingest.EventReader.decodeStartStream(spark, lines)) shouldBe 1
+    parses(graft.ingest.EventReader.decodeEndStream(spark, lines)) shouldBe 1
+  }
+
+  test("Par.spread over a broadcast-join frame starts no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{broadcast, col}
+    // the build side needs a job to collect, so probing `.rdd` would
+    // run it eagerly under AQE
+    val df = Seq(1L, 2L, 3L).toDF("id").join(broadcast(spark.range(10).toDF("id")), "id")
+    val (_, jobs) = withJobCount(graft.ext.Par.spread(df, col("id")))
+    jobs shouldBe 0
+  }
 }
